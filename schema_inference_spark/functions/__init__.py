@@ -1,3 +1,3 @@
 """Shared Spark helpers: session builder, salting, canonical output order."""
 
-from .session import get_spark, stop_spark  # noqa: F401
+from .session import get_spark, local_frame, stop_spark  # noqa: F401

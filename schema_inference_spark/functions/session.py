@@ -3,8 +3,21 @@
 from __future__ import annotations
 
 import os
+from typing import Sequence, Union
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
+
+# Spark's codegen cache (spark.sql.codegen.cache.maxEntries, default 100)
+# holds compiled classes keyed by their generated source. One validate()
+# generates more than 100, so at the default every warm op evicts and
+# re-compiles (Janino, then JIT) the classes of its own previous op. The
+# widest validate() (every opt-in check on, 60-conversation fixture)
+# compiles 329 classes on the clustered path and 298 on the fused path in
+# a fresh JVM; 1000 holds about three such ops.
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 def _resolve_master(explicit: str | None, cpus: str,
@@ -36,7 +49,8 @@ def get_spark(app_name: str = "schema-inference-spark",
     regardless of cores). 16MB keeps local scans parallel; prod clusters
     keep the default.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS",
+                          str(len(os.sched_getaffinity(0))))
     master = _resolve_master(master, cpus, os.environ)
     shuffle = shuffle_partitions if shuffle_partitions is not None else int(cpus)
     mpb = max_partition_bytes or os.environ.get(
@@ -60,6 +74,8 @@ def get_spark(app_name: str = "schema-inference-spark",
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.codegen.cache.maxEntries",
+                str(CODEGEN_CACHE_ENTRIES))
         .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
@@ -84,6 +100,28 @@ def get_spark(app_name: str = "schema-inference-spark",
     if master is not None:
         builder = builder.master(master)
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows: Sequence[Sequence],
+                schema: Union[StructType, str]) -> DataFrame:
+    """``rows`` (tuples in ``schema`` field order) as a JVM local relation.
+
+    Every driver-built frame goes through here, never through
+    ``spark.createDataFrame(<list>)``: a Python list plans as a Python
+    RDD, so each action over it starts Python-worker tasks, and each
+    such task pays pyspark's ``importlib.invalidate_caches()`` in
+    ``worker_util.setup_spark_files`` (0.1-0.2 CPU-s per task when the
+    workers import pyspark from a zip). An Arrow table crosses into the
+    JVM once, on the driver, and plans as a ``LocalTableScan``.
+    """
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)],
+        schema=arrow)
+    return spark.createDataFrame(table, schema)
 
 
 def stop_spark() -> None:

@@ -29,6 +29,8 @@ from typing import Iterable, List, Optional
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.session import local_frame
+
 VIOLATION_COLS = [
     "snapshot_id", "partition_id", "check_id", "mgu_failure",
     "schema_1", "schema_2", "conv_id", "turn_idx", "payload",
@@ -57,7 +59,7 @@ def _shape(df: DataFrame, snapshot_id: str, check_id: str,
 
 
 def empty_violations(spark) -> DataFrame:
-    return spark.createDataFrame([], VIOLATION_DDL)
+    return local_frame(spark, [], VIOLATION_DDL)
 
 
 def stable_order(v: DataFrame) -> DataFrame:
@@ -125,7 +127,7 @@ def check_referential(df: DataFrame, snapshot_id: str, column: str,
     is the offending singleton enum, schema_2 the vocabulary enum.
     """
     spark = df.sparkSession
-    vocab_df = spark.createDataFrame([(v,) for v in vocab], f"{column} string")
+    vocab_df = local_frame(spark, [(v,) for v in vocab], f"{column} string")
     base = df.select(partition_col, "conv_id", "turn_idx", column)
     if nullable:
         base = base.filter(F.col(column).isNotNull())
@@ -942,7 +944,7 @@ def vocab_diff(df: DataFrame, column: str, vocab: List[str]) -> DataFrame:
     """Distinct out-of-vocab values (enum-subset check at the schema level,
     README.md:273-279) — exceptAll over pre-aggregated distincts."""
     spark = df.sparkSession
-    vocab_df = spark.createDataFrame([(v,) for v in vocab], f"{column} string")
+    vocab_df = local_frame(spark, [(v,) for v in vocab], f"{column} string")
     return (df.select(column).filter(F.col(column).isNotNull())
             .distinct().exceptAll(vocab_df))
 

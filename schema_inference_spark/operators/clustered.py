@@ -54,6 +54,8 @@ from typing import Iterator, List
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.session import local_frame
+
 ROLE_NULL_SCHEMA = '{"type":"enum","values":[null]}'
 
 _OUT_DDL = (
@@ -63,6 +65,10 @@ _OUT_DDL = (
     "f_conv string, f_turn bigint, f_ts bigint, f_bucket int, "
     "l_conv string, l_turn bigint, l_ts bigint"
 )
+
+# one row per scan split, as _plan_splits returns them
+SPLIT_DDL = ("split_id long, fid int, path string, partition_id int, "
+             "rg_start int, rg_end int, pos0 long")
 
 _TS_FMT = "yyyy-MM-dd'T'HH:mm:ssXXX"
 
@@ -649,11 +655,10 @@ def check_rowlevel_clustered(spark: SparkSession, catalog, snapshot_id: str,
         import pyarrow.parquet as _pq
         state_cols = [c for c in _pq.ParquetFile(splits[0][2])
                       .schema_arrow.names if c != partition_col]
-    splits_df = spark.createDataFrame(
-        splits,
-        "split_id long, fid int, path string, partition_id int, "
-        "rg_start int, rg_end int, pos0 long")
+    splits_df = local_frame(spark, splits, SPLIT_DDL)
     if splits:
+        # a JVM-only round-robin shuffle of the split rows: one split
+        # per task
         splits_df = splits_df.repartition(len(splits))
     out = splits_df.mapInArrow(
         _native_split_reader(checker, role_vocab, tool_vocab, batch_rows,
@@ -781,20 +786,28 @@ def check_rowlevel_clustered(spark: SparkSession, catalog, snapshot_id: str,
     # ONE driver action carries all three verifications (extent lie,
     # seam lie, per-split read errors) — fixed per-snapshot cost is one
     # small job. The error branch reads the SMALL checkpointed store
-    # (kind=5 is sparse by construction).
+    # (kind=5 is sparse by construction). With collect_states on a
+    # manifest of <= 256 splits, the kind=4 fused-state rows (one per
+    # split and partition) ride the same action for the driver-side
+    # merge below.
+    fold_states = collect_states and len(splits) <= 256
     bad_extent, bad_seam, b = _verify_frames(out, rowsrc)
+    side = (rowsrc.filter(F.col("kind").isin(5, 4) if fold_states
+                          else F.col("kind") == 5)
+            .select(F.when(F.col("kind") == 5, F.lit("read_error"))
+                    .otherwise(F.lit("state")).alias("why"),
+                    F.lit(None).cast("string").alias("conv_id"),
+                    "partition_id", "payload"))
     rows = (_probe(bad_extent, bad_seam)
             .select("why", "conv_id",
                     F.lit(None).cast("int").alias("partition_id"),
                     F.lit(None).cast("string").alias("payload"))
-            .unionByName(rowsrc.filter(F.col("kind") == 5)
-                         .select(F.lit("read_error").alias("why"),
-                                 F.lit(None).cast("string").alias("conv_id"),
-                                 "partition_id", "payload"))
+            .unionByName(side)
             .collect())
     read_errors = {r.partition_id: r.payload for r in rows
                    if r.why == "read_error"}
-    probs = [r for r in rows if r.why != "read_error"]
+    states = [r for r in rows if r.why == "state"]
+    probs = [r for r in rows if r.why in ("extent", "seam")]
     if read_errors:
         # the per-partition by-value :throw. Every row of an errored
         # partition — including rows good splits of it already produced —
@@ -908,17 +921,21 @@ def check_rowlevel_clustered(spark: SparkSession, catalog, snapshot_id: str,
     # byte-range-split manifest must not ship 10^6 state blobs through
     # the driver.
     from .infer import merge_part_states
-    k4 = rowsrc.filter(F.col("kind") == 4).select("partition_id", "payload")
-    if len(splits) <= 256:
+    if fold_states:
+        # collected with the verification above, before the errored
+        # partitions were filtered out of the stores: drop theirs here
         by_pid: dict = {}
-        for r in k4.collect():
+        for r in states:
+            if r.partition_id in read_errors:
+                continue
             st = json.loads(r.payload)
             by_pid[r.partition_id] = (
                 merge_part_states(by_pid[r.partition_id], st)
                 if r.partition_id in by_pid else st)
         pstates = sorted(by_pid.items())
-        _tmark("state collect")
     else:
+        k4 = rowsrc.filter(F.col("kind") == 4).select("partition_id",
+                                                      "payload")
         pstates = sorted(
             k4.rdd
             .map(lambda r: (r[0], json.loads(r[1])))

@@ -23,11 +23,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .functions.prof import profile_marker
+from .functions.session import local_frame
 from .operators import checks as C
 from .operators import stats as S
 from .operators.drift import drift_violations, schema_drift_violation
 from .operators.infer import InferResult, infer_snapshot, read_snapshot_tolerant
 from .sources.catalog import SnapshotCatalog
+
+VERDICT_DDL = ("snapshot_id string, partition_id int, verdict string, "
+               "n_rows bigint, n_violations bigint, wall_ms bigint, "
+               "state_json string")
 
 ROLE_VOCAB = ["system", "user", "assistant", "tool"]
 TOOL_VOCAB = ["search", "code", "browser", "none"]
@@ -177,8 +182,8 @@ def validate(
             snapshot_id, [], {}, empty_v,
             catalog.read_audit(spark, snapshot_id),
             InferResult(snapshot_id, {}, {}, {}, {}, []),
-            stats_thunk=lambda: spark.createDataFrame(
-                [], "snapshot_id string, column string"),
+            stats_thunk=lambda: local_frame(
+                spark, [], "snapshot_id string, column string"),
             check_path="none")
 
     # -- census first (metadata-only): selects the check path ---------------
@@ -493,7 +498,8 @@ def validate(
                         driver_rows.append(row)
             out_violations = violations
             if driver_rows:
-                drv = spark.createDataFrame(
+                drv = local_frame(
+                    spark,
                     [tuple(r[c] for c in C.VIOLATION_COLS)
                      for r in driver_rows],
                     C.VIOLATION_DDL)
@@ -572,10 +578,7 @@ def validate(
         # partition's tally — one drift hit must not flip all partitions
         verdict_rows.append((snapshot_id, -1, "fail", 0,
                              int(snapshot_level), wall_ms, json.dumps({})))
-    verdicts = spark.createDataFrame(
-        verdict_rows,
-        "snapshot_id string, partition_id int, verdict string, "
-        "n_rows bigint, n_violations bigint, wall_ms bigint, state_json string")
+    verdicts = local_frame(spark, verdict_rows, VERDICT_DDL)
 
     # -- audit append (D19): idempotent per-partition lineage -----------------
     _mark("verdicts")

@@ -27,6 +27,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.session import local_frame
+
 AUDIT_SCHEMA = T.StructType([
     T.StructField("snapshot_id", T.StringType(), False),
     T.StructField("partition_id", T.IntegerType(), False),
@@ -104,20 +106,25 @@ class SnapshotCatalog:
     def _audit_dir(self, snapshot_id: str) -> str:
         return os.path.join(self.audit_root, f"snapshot_id={snapshot_id}")
 
-    def read_audit(self, spark: SparkSession, snapshot_id: str) -> DataFrame:
+    def _has_audit(self, snapshot_id: str) -> bool:
         d = self._audit_dir(snapshot_id)
-        if not os.path.isdir(d) or not any(
-                f.endswith(".parquet") for f in os.listdir(d)):
-            return spark.createDataFrame([], AUDIT_SCHEMA)
-        df = spark.read.parquet(d)
+        return os.path.isdir(d) and any(
+            f.endswith(".parquet") for f in os.listdir(d))
+
+    def read_audit(self, spark: SparkSession, snapshot_id: str) -> DataFrame:
+        if not self._has_audit(snapshot_id):
+            return local_frame(spark, [], AUDIT_SCHEMA)
+        df = spark.read.parquet(self._audit_dir(snapshot_id))
         return df.withColumn("snapshot_id", F.lit(snapshot_id)).select(
             *[f.name for f in AUDIT_SCHEMA.fields])
 
     def completed_partitions(self, spark: SparkSession, snapshot_id: str) -> List[int]:
-        audit = self.read_audit(spark, snapshot_id)
-        if audit.isEmpty():
+        # a first run has no audit files: answer from the file system
+        # without a Spark job
+        if not self._has_audit(snapshot_id):
             return []
-        rows = (audit.filter(F.col("verdict").isin("pass", "fail"))
+        rows = (self.read_audit(spark, snapshot_id)
+                .filter(F.col("verdict").isin("pass", "fail"))
                 .select("partition_id").distinct().collect())
         return sorted(r.partition_id for r in rows)
 
@@ -159,7 +166,7 @@ class SnapshotCatalog:
             f.endswith(".parquet")
             for _, _, fs in os.walk(d) for f in fs)
         if not has_files:
-            return spark.createDataFrame([], VIOLATION_DDL)
+            return local_frame(spark, [], VIOLATION_DDL)
         df = (spark.read.option("basePath", d).parquet(d)
               .withColumn("snapshot_id", F.lit(snapshot_id))
               .withColumn("partition_id", F.col("partition_id").cast("int")))
