@@ -19,6 +19,33 @@ from pyspark.sql.types import StructType
 # a fresh JVM; 1000 holds about three such ops.
 CODEGEN_CACHE_ENTRIES = 1000
 
+# The driver heap defaults to this share of physical memory (capped at
+# 32g), and is pre-touched only when it is no larger: the rest of the
+# host stays free for Python workers and for the child spark-submit JVMs
+# a test run starts, each of which sizes its own heap the same way.
+_HEAP_SHARE = 4
+_MAX_DEFAULT_HEAP = 32 << 30
+_SIZE_UNITS = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
+
+
+def _heap_bytes(size: str) -> int:
+    """A JVM size string ("3g", "512m", "1048576") in bytes."""
+    size = size.strip().lower().removesuffix("b")
+    if size and size[-1] in _SIZE_UNITS:
+        return int(size[:-1]) * _SIZE_UNITS[size[-1]]
+    return int(size)
+
+
+def _driver_heap(env: "os._Environ[str] | dict[str, str]",
+                 mem_total: int) -> tuple[str, bool]:
+    """(driver heap size, pre-touch it?) for a host with ``mem_total``
+    bytes of physical memory. ``SPARK_GRAFT_DRIVER_MEM`` overrides the
+    size; pre-touch follows from the size either way."""
+    share = mem_total // _HEAP_SHARE
+    heap = env.get("SPARK_GRAFT_DRIVER_MEM",
+                   f"{min(_MAX_DEFAULT_HEAP, share) >> 20}m")
+    return heap, _heap_bytes(heap) <= share
+
 
 def _resolve_master(explicit: str | None, cpus: str,
                     env: "os._Environ[str] | dict[str, str]") -> str | None:
@@ -55,7 +82,8 @@ def get_spark(app_name: str = "schema-inference-spark",
     shuffle = shuffle_partitions if shuffle_partitions is not None else int(cpus)
     mpb = max_partition_bytes or os.environ.get(
         "SPARK_GRAFT_MAX_PARTITION_BYTES", "16m")
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g")
+    driver_mem, pretouch = _driver_heap(
+        os.environ, os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES"))
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle))
@@ -89,14 +117,14 @@ def get_spark(app_name: str = "schema-inference-spark",
     # cluster executor pays this once at executor launch and never per
     # query, which is exactly what the flag reproduces locally (guide
     # §5: memory behavior belongs to process lifecycle, not to the
-    # queries that happen to run first). Opt out / resize via env for
-    # memory-tight hosts; no effect under spark-submit (the JVM is
-    # already up, Spark ignores driver extraJavaOptions then).
-    if os.environ.get("SPARK_GRAFT_PRETOUCH", "1") != "0":
-        xms = os.environ.get("SPARK_GRAFT_XMS", driver_mem)
+    # queries that happen to run first). A heap above _HEAP_SHARE of
+    # physical memory is not pre-touched: committing it up front is what
+    # gets a JVM killed on a small host. No effect under spark-submit
+    # (the JVM is already up, Spark ignores driver extraJavaOptions then).
+    if pretouch:
         builder = builder.config(
             "spark.driver.extraJavaOptions",
-            f"-Xms{xms} -XX:+AlwaysPreTouch")
+            f"-Xms{driver_mem} -XX:+AlwaysPreTouch")
     if master is not None:
         builder = builder.master(master)
     return builder.getOrCreate()
@@ -122,6 +150,16 @@ def local_frame(spark: SparkSession, rows: Sequence[Sequence],
         [pa.array(c, type=f.type) for c, f in zip(cols, arrow)],
         schema=arrow)
     return spark.createDataFrame(table, schema)
+
+
+def sql_ident(name: str) -> str:
+    """``name`` as a quoted SQL identifier inside text for
+    ``spark.sql(text, args, **frames)``. Backticks double for the SQL
+    parser and braces double for the ``str.format`` pass that
+    ``spark.sql`` runs over the text when frames are given. Values never
+    go through here: they are bound as ``args``."""
+    return "`" + (name.replace("`", "``").replace("{", "{{")
+                  .replace("}", "}}")) + "`"
 
 
 def stop_spark() -> None:

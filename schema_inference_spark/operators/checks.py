@@ -29,7 +29,7 @@ from typing import Iterable, List, Optional
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.session import local_frame
+from ..functions.session import local_frame, sql_ident
 
 VIOLATION_COLS = [
     "snapshot_id", "partition_id", "check_id", "mgu_failure",
@@ -65,8 +65,9 @@ def empty_violations(spark) -> DataFrame:
 def stable_order(v: DataFrame) -> DataFrame:
     """Canonical violation ordering for byte-for-byte comparability
     (FIXTURES.md F5; north_rule)."""
-    return v.orderBy("snapshot_id", "partition_id", "check_id",
-                     "conv_id", "turn_idx", "payload")
+    return v.sparkSession.sql(
+        "SELECT * FROM {v} ORDER BY snapshot_id, partition_id, check_id, "
+        "conv_id, turn_idx, payload", v=v)
 
 
 # ---------------------------------------------------------------------------
@@ -568,11 +569,13 @@ _BIAS_T = "1099511627776"           # 2^40 turn_idx bias
 _BIAS_M = "9223372036854775808"     # 2^63 unix_micros bias
 
 
+_PACK_SQL = (f"(cast(turn_idx as decimal(38,0)) + {_BIAS_T})"
+             f" * cast('{_PACK}' as decimal(38,0))"
+             f" + (cast(unix_micros(ts) as decimal(38,0)) + {_BIAS_M})")
+
+
 def _pack_turn_ts():
-    return F.expr(
-        f"(cast(turn_idx as decimal(38,0)) + {_BIAS_T})"
-        f" * cast('{_PACK}' as decimal(38,0))"
-        f" + (cast(unix_micros(ts) as decimal(38,0)) + {_BIAS_M})")
+    return F.expr(_PACK_SQL)
 
 
 def _unpack_turn(col):
@@ -786,7 +789,7 @@ def check_rowlevel_fused(df: DataFrame, snapshot_id: str,
       aggregate form; note partial aggregation already bounds reducer
       input for combinable aggs — see its docstring.)
     - referential: vocab membership is a per-row predicate (the vocab is
-      a literal enum) — evaluated inline, same rows as the broadcast
+      a bound array parameter) — evaluated inline, same rows as the broadcast
       anti-join.
     - ordering: identical carrier-row construction as
       ``check_ordering_blocked`` (gap spanning whole blocks included).
@@ -795,145 +798,145 @@ def check_rowlevel_fused(df: DataFrame, snapshot_id: str,
     A previous version also ran count/min/row_number windows keyed on
     (conv, blk, turn_idx) — ~one group PER ROW, three extra sort+window
     passes, 4x slower end-to-end at 9.5M turns.
+
+    The plan enters the JVM as one SQL text (``_FUSED_SQL``): built from
+    Column objects, at three Py4J round trips per ``F.*`` node, it would
+    cost ~3,600 round trips and 0.6-1.2 s of driver time per call. The
+    snapshot id and the vocabularies are bound parameters.
     """
     vj = lambda vocab: json.dumps({"type": "enum", "values": sorted(vocab)},  # noqa: E731
                                   sort_keys=True, separators=(",", ":"))
+    return df.sparkSession.sql(
+        _FUSED_SQL.format(pc=sql_ident(partition_col),
+                          block_size=int(block_size)),
+        args={"snap": snapshot_id,
+              "role_vocab": list(role_vocab), "tool_vocab": list(tool_vocab),
+              "role_enum": vj(role_vocab), "tool_enum": vj(tool_vocab)},
+        df=df)
 
-    def mk(check_id, mgu, s1, s2, payload, pid):
-        return F.struct(
-            F.lit(check_id).alias("check_id"),
-            F.lit(mgu).cast("string").alias("mgu_failure"),
-            (s1 if s1 is not None else F.lit(None)).cast("string").alias("schema_1"),
-            (s2 if s2 is not None else F.lit(None)).cast("string").alias("schema_2"),
-            payload.cast("string").alias("payload"),
-            pid.cast("int").alias("partition_id"))
 
-    enum1 = lambda c: F.to_json(F.struct(  # noqa: E731
-        F.lit("enum").alias("type"), F.array(F.col(c)).alias("values")))
-    pid = F.col(partition_col)
+def _vstruct(check_id: str, payload: str, mgu: str = "NULL",
+             schema_1: str = "NULL", schema_2: str = "NULL") -> str:
+    """SQL for one violation struct of the fused plan; every struct has
+    the same fields, so ``concat`` can join the arrays they are built
+    into. ``{pc}`` is left for ``_FUSED_SQL.format`` to fill with the
+    partition column."""
+    return (f"named_struct('check_id', '{check_id}', "
+            f"'mgu_failure', CAST({mgu} AS STRING), "
+            f"'schema_1', CAST({schema_1} AS STRING), "
+            f"'schema_2', CAST({schema_2} AS STRING), "
+            f"'payload', CAST({payload} AS STRING), "
+            "'partition_id', CAST({pc} AS INT))")
 
-    # vocab checks are per-row predicates over the scan — evaluate them
-    # MAP-SIDE and carry only the (sparse) pre-built violation structs
-    # through the shuffle, instead of shuffling the role/tool strings for
-    # every row into the sort. Clean rows carry an empty array (a null
-    # bit + offset in UnsafeRow), so the Exchange+Sort — the memory-
-    # bandwidth-bound stage that caps N->4N scaling here — moves ~40%
-    # fewer bytes per row.
-    role_cond = F.col("role").isNull() | ~F.col("role").isin(role_vocab)
-    tool_cond = F.col("tool").isNotNull() & ~F.col("tool").isin(tool_vocab)
-    vocab_arr = F.filter(F.array(
-        F.when(role_cond, mk(
-            "ref_role", "non_equal", enum1("role"), F.lit(vj(role_vocab)),
-            F.to_json(F.struct(F.col("role").alias("value"))), pid)),
-        F.when(tool_cond, mk(
-            "ref_tool", "non_equal", enum1("tool"), F.lit(vj(tool_vocab)),
-            F.to_json(F.struct(F.col("tool").alias("value"))), pid)),
-    ), lambda x: x.isNotNull())
 
-    base = (df.select(partition_col, "conv_id", "turn_idx", "ts",
-                      vocab_arr.alias("_vv"))
-            .withColumn("_blk", F.floor(F.col("turn_idx") / block_size)))
-    empty_vv = F.array().cast(base.schema["_vv"].dataType.simpleString())
+# a violation payload's timestamp format, as a SQL string literal
+TS_FORMAT_SQL = "'yyyy-MM-dd\\'T\\'HH:mm:ssXXX'"
+_DEC = "DECIMAL(38,0)"
 
-    # carrier rows: each block's last row injected into the next
-    # NON-EMPTY block (same construction as check_ordering_blocked,
-    # same packed-decimal hash aggregate — see _pack_turn_ts)
-    blk_last = (base.groupBy("conv_id", "_blk")
-                .agg(F.max(_pack_turn_ts()).alias("_o")))
-    wb = Window.partitionBy("conv_id").orderBy("_blk")
-    last = (blk_last
-            .withColumn("_next_blk", F.lead("_blk").over(wb))
-            .filter(F.col("_next_blk").isNotNull())
-            .select("conv_id", F.col("_next_blk").alias("_blk"),
-                    _unpack_turn(F.col("_o")).alias("turn_idx"),
-                    _unpack_ts(F.col("_o")).alias("ts"),
-                    F.lit(0).alias(partition_col),
-                    empty_vv.alias("_vv"),
-                    F.lit(True).alias("_carrier")))
-    unioned = base.withColumn("_carrier", F.lit(False)).unionByName(last)
-
-    w = Window.partitionBy("conv_id", "_blk").orderBy("turn_idx", "ts")
-    ordered = (unioned
-               .withColumn("_prev_idx", F.lag("turn_idx").over(w))
-               .withColumn("_prev_ts", F.lag("ts").over(w))
-               # lead: flags the FIRST member of a duplicate run (its lag
-               # is a different key). Carriers never share a key with real
-               # rows (a carrier's turn_idx comes from an EARLIER block),
-               # so no carrier guard is needed in the dup test.
-               .withColumn("_next_idx", F.lead("turn_idx").over(w))
-               .filter(~F.col("_carrier")))
-
-    uniq_cond = ((F.col("turn_idx") == F.col("_prev_idx"))
-                 | (F.col("turn_idx") == F.col("_next_idx")))
-    gap_cond = (F.col("_prev_idx").isNotNull()
-                & (F.col("turn_idx") > F.col("_prev_idx") + 1))
-    dup_cond = (F.col("_prev_idx").isNotNull()
-                & (F.col("turn_idx") == F.col("_prev_idx")))
-    ts_cond = (F.col("_prev_ts").isNotNull()
-               & (F.col("ts") < F.col("_prev_ts")))
-
-    arr = F.array(
-        F.when(uniq_cond, mk(
-            # raw per-member row; folded to one (n_copies, min-bucket)
-            # row by the post-explode window below
-            "unique_key", None, None, None,
-            F.lit(None).cast("string"), pid)),
-        F.when(gap_cond, mk(
-            "turn_gap", None, None, None,
-            F.to_json(F.struct(
-                F.col("_prev_idx").cast("bigint").alias("prev_idx"),
-                (F.col("turn_idx") - F.col("_prev_idx") - 1)
-                .cast("bigint").alias("missing"))), pid)),
-        F.when(dup_cond, mk(
-            "turn_dup", None, None, None,
-            F.to_json(F.struct(
-                F.col("_prev_idx").cast("bigint").alias("prev_idx"))), pid)),
-        F.when(ts_cond, mk(
-            "ts_order", None, None, None,
-            F.to_json(F.struct(
-                F.date_format("_prev_ts", "yyyy-MM-dd'T'HH:mm:ssXXX")
-                .alias("prev_ts"),
-                F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ssXXX")
-                .alias("ts"))), pid)),
-    )
-
-    exploded = (ordered
-                .select("conv_id", "turn_idx",
-                        F.explode(F.concat(
-                            F.col("_vv"),
-                            F.filter(arr, lambda x: x.isNotNull()))).alias("_v"))
-                .select(F.lit(snapshot_id).alias("snapshot_id"),
-                        F.col("_v.partition_id").alias("partition_id"),
-                        F.col("_v.check_id").alias("check_id"),
-                        F.col("_v.mgu_failure").alias("mgu_failure"),
-                        F.col("_v.schema_1").alias("schema_1"),
-                        F.col("_v.schema_2").alias("schema_2"),
-                        F.col("conv_id").cast("string").alias("conv_id"),
-                        F.col("turn_idx").cast("bigint").alias("turn_idx"),
-                        F.col("_v.payload").alias("payload")))
-
-    # fold the per-member unique_key rows into one row per duplicated key
-    # (count = n_copies, min-bucket attribution — exactly the aggregate
-    # form's output). This window runs over VIOLATION rows only, which
-    # are sparse by assumption; every other check's rows pass through
-    # untouched (their duplicates are legitimate, e.g. two turn_dup rows
-    # for a triple-duplicated key).
-    is_uniq = F.col("check_id") == "unique_key"
-    wu = Window.partitionBy("check_id", "conv_id", "turn_idx")
-    return (exploded
-            .withColumn("_n", F.count(F.lit(1)).over(wu))
-            .withColumn("_pmin", F.min("partition_id").over(wu))
-            .withColumn("_rn", F.row_number().over(
-                wu.orderBy("partition_id")))
-            .filter(~is_uniq | (F.col("_rn") == 1))
-            .select("snapshot_id",
-                    F.when(is_uniq, F.col("_pmin"))
-                    .otherwise(F.col("partition_id")).alias("partition_id"),
-                    "check_id", "mgu_failure", "schema_1", "schema_2",
-                    "conv_id", "turn_idx",
-                    F.when(is_uniq, F.to_json(F.struct(
-                        F.col("_n").alias("n_copies"))))
-                    .otherwise(F.col("payload")).alias("payload")))
+# {pc}: the quoted partition column; {block_size}: an int. The text then
+# goes through spark.sql's own str.format, which fills {df} and turns the
+# doubled braces back into single ones. Vocab violations are built
+# map-side, before the exchange: clean rows carry an empty array, so the
+# Exchange+Sort moves ~40% fewer bytes per row than shuffling the
+# role/tool strings. A carrier's _vv is NULL; carriers are dropped before
+# anything reads it.
+_FUSED_SQL = f"""
+WITH base AS (
+  SELECT {{pc}}, conv_id, turn_idx, ts,
+    filter(array(
+      CASE WHEN role IS NULL OR NOT array_contains(:role_vocab, role) THEN
+        {_vstruct("ref_role",
+                  "to_json(named_struct('value', role))", "'non_equal'",
+                  "to_json(named_struct('type', 'enum', 'values', array(role)))",
+                  ":role_enum")} END,
+      CASE WHEN tool IS NOT NULL AND NOT array_contains(:tool_vocab, tool) THEN
+        {_vstruct("ref_tool",
+                  "to_json(named_struct('value', tool))", "'non_equal'",
+                  "to_json(named_struct('type', 'enum', 'values', array(tool)))",
+                  ":tool_enum")} END
+    ), x -> x IS NOT NULL) AS _vv,
+    floor(turn_idx / {{block_size}}) AS _blk
+  FROM {{{{df}}}}
+),
+blk_last AS (
+  SELECT conv_id, _blk, max({_PACK_SQL}) AS _o
+  FROM base GROUP BY conv_id, _blk
+),
+carriers AS (
+  SELECT conv_id, _next_blk AS _blk,
+    CAST(CAST(_o / CAST('{_PACK}' AS {_DEC}) AS {_DEC})
+         - CAST({_BIAS_T} AS {_DEC}) AS BIGINT) AS turn_idx,
+    timestamp_micros(CAST(_o % CAST('{_PACK}' AS {_DEC})
+                          - CAST({_BIAS_M} AS {_DEC}) AS BIGINT)) AS ts,
+    0 AS {{pc}}, NULL AS _vv, true AS _carrier
+  FROM (SELECT *, lead(_blk) OVER (PARTITION BY conv_id ORDER BY _blk)
+                  AS _next_blk
+        FROM blk_last)
+  WHERE _next_blk IS NOT NULL
+),
+ordered AS (
+  SELECT * FROM (
+    SELECT *,
+      lag(turn_idx) OVER w AS _prev_idx,
+      lag(ts) OVER w AS _prev_ts,
+      -- lead flags the FIRST member of a duplicate run (its lag is a
+      -- different key). A carrier's turn_idx comes from an EARLIER
+      -- block, so it never shares a key with a real row.
+      lead(turn_idx) OVER w AS _next_idx
+    FROM (SELECT conv_id, _blk, turn_idx, ts, {{pc}}, _vv, false AS _carrier
+          FROM base
+          UNION ALL
+          SELECT conv_id, _blk, turn_idx, ts, {{pc}}, _vv, _carrier
+          FROM carriers)
+    WINDOW w AS (PARTITION BY conv_id, _blk ORDER BY turn_idx, ts))
+  WHERE NOT _carrier
+),
+exploded AS (
+  SELECT :snap AS snapshot_id, _v.partition_id, _v.check_id,
+    _v.mgu_failure, _v.schema_1, _v.schema_2,
+    CAST(conv_id AS STRING) AS conv_id,
+    CAST(turn_idx AS BIGINT) AS turn_idx, _v.payload
+  FROM (SELECT conv_id, turn_idx, explode(concat(_vv, filter(array(
+      -- raw per-member row; folded to one (n_copies, min-bucket) row
+      -- by the window below
+      CASE WHEN turn_idx = _prev_idx OR turn_idx = _next_idx THEN
+        {_vstruct("unique_key", "NULL")} END,
+      CASE WHEN _prev_idx IS NOT NULL AND turn_idx > _prev_idx + 1 THEN
+        {_vstruct("turn_gap", "to_json(named_struct("
+                  "'prev_idx', CAST(_prev_idx AS BIGINT), "
+                  "'missing', CAST(turn_idx - _prev_idx - 1 AS BIGINT)))")} END,
+      CASE WHEN _prev_idx IS NOT NULL AND turn_idx = _prev_idx THEN
+        {_vstruct("turn_dup", "to_json(named_struct("
+                  "'prev_idx', CAST(_prev_idx AS BIGINT)))")} END,
+      CASE WHEN _prev_ts IS NOT NULL AND ts < _prev_ts THEN
+        {_vstruct("ts_order", "to_json(named_struct("
+                  f"'prev_ts', date_format(_prev_ts, {TS_FORMAT_SQL}), "
+                  f"'ts', date_format(ts, {TS_FORMAT_SQL})))")} END
+    ), x -> x IS NOT NULL))) AS _v
+    FROM ordered)
+)
+-- fold the per-member unique_key rows into one row per duplicated key
+-- (count = n_copies, min-bucket attribution — exactly the aggregate
+-- form's output). This window runs over VIOLATION rows only, which are
+-- sparse by assumption; every other check's rows pass through untouched
+-- (their duplicates are legitimate, e.g. two turn_dup rows for a
+-- triple-duplicated key).
+SELECT snapshot_id,
+  CASE WHEN check_id = 'unique_key' THEN _pmin ELSE partition_id END
+    AS partition_id,
+  check_id, mgu_failure, schema_1, schema_2, conv_id, turn_idx,
+  CASE WHEN check_id = 'unique_key'
+       THEN to_json(named_struct('n_copies', _n)) ELSE payload END
+    AS payload
+FROM (SELECT *,
+        count(1) OVER wu AS _n,
+        min(partition_id) OVER wu AS _pmin,
+        row_number() OVER (PARTITION BY check_id, conv_id, turn_idx
+                           ORDER BY partition_id) AS _rn
+      FROM exploded
+      WINDOW wu AS (PARTITION BY check_id, conv_id, turn_idx))
+WHERE check_id <> 'unique_key' OR _rn = 1
+"""
 
 
 # ---------------------------------------------------------------------------

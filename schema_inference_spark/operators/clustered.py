@@ -51,10 +51,10 @@ from __future__ import annotations
 import json
 from typing import Iterator, List
 
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
 
 from ..functions.session import local_frame
+from .checks import TS_FORMAT_SQL
 
 ROLE_NULL_SCHEMA = '{"type":"enum","values":[null]}'
 
@@ -69,8 +69,6 @@ _OUT_DDL = (
 # one row per scan split, as _plan_splits returns them
 SPLIT_DDL = ("split_id long, fid int, path string, partition_id int, "
              "rg_start int, rg_end int, pos0 long")
-
-_TS_FMT = "yyyy-MM-dd'T'HH:mm:ssXXX"
 
 
 def _vocab_json(vocab: List[str]) -> str:
@@ -594,6 +592,138 @@ def _native_split_reader(checker, role_vocab: List[str],
     return fn
 
 
+# The plans below read the two checkpointed stores of
+# check_rowlevel_clustered: {out} (every UDF row) and {rowsrc} (all but the
+# kind=3 extent rows). Each enters the JVM as one SQL text: built from
+# Column objects, they would cost ~2,600 Py4J round trips per call.
+#
+# Cross-split pairs, TWO-LEVEL: boundary rows ordered by manifest file
+# order + in-file position reconstruct global scan order. Level 1 pairs
+# segments WITHIN each file (window per fid — parallel across files, so
+# 10^5-10^6 byte-range splits of a few big files never funnel through
+# one task). Level 2 pairs each file's first segment with the previous
+# present file's last segment — the only driver-order pass, one row per
+# FILE (manifest-sized), broadcast to the join. Only pairs that continue
+# one conversation across the seam are kept.
+_PAIRS_SQL = """
+WITH bnd AS (
+  SELECT fid, pos, f_conv, f_turn, f_ts, f_bucket, l_conv, l_turn, l_ts
+  FROM {rowsrc} WHERE kind = 1
+),
+ranked AS (
+  SELECT *, lag(l_conv) OVER wf AS p_conv, lag(l_turn) OVER wf AS p_turn,
+    lag(l_ts) OVER wf AS p_ts, row_number() OVER wf AS _rn
+  FROM bnd WINDOW wf AS (PARTITION BY fid ORDER BY pos)
+),
+lasts AS (
+  SELECT * FROM (
+    SELECT fid AS _pf, l_conv AS p_conv, l_turn AS p_turn, l_ts AS p_ts,
+      lead(fid) OVER (ORDER BY fid) AS _nf
+    FROM (SELECT *, row_number() OVER (PARTITION BY fid ORDER BY pos DESC)
+                    AS _rn
+          FROM bnd)
+    WHERE _rn = 1)
+  WHERE _nf IS NOT NULL
+)
+SELECT * FROM (
+  SELECT fid, pos, f_conv, f_turn, f_ts, f_bucket, p_conv, p_turn, p_ts
+  FROM ranked WHERE _rn > 1
+  UNION ALL
+  SELECT /*+ BROADCAST(lasts) */ r.fid, r.pos, r.f_conv, r.f_turn, r.f_ts,
+    r.f_bucket, lasts.p_conv, lasts.p_turn, lasts.p_ts
+  FROM ranked r JOIN lasts ON r.fid = lasts._nf
+  WHERE r._rn = 1)
+WHERE p_conv = f_conv
+"""
+
+# Layout verification, one row per finding: (why, conv_id, partition_id,
+# payload), at most one 'extent' and one 'seam' row.
+#
+# extent — GLOBAL conv contiguity: the UDF verifies contiguity within
+# each split; the boundary stitch compares only ADJACENT segments. A
+# cross-split-only lie — a conv reappearing in a non-adjacent segment —
+# is invisible to both, so verify globally: each conv must occupy exactly
+# one maximal run of consecutive segments, first-of-segment everywhere
+# but its first segment and last-of-segment everywhere but its last.
+# Inputs are the per-(conv, segment) extent rows (kind=3, ~one per
+# conversation; flags in cnt: 1 = first conv of its segment, 2 = last)
+# and a segment-rank table (#segments rows of two ints — the rank window
+# is a single tiny task, bounded by split count, not row count).
+#
+# seam — cross-split sort order: a lie that exists ONLY across a
+# boundary (locally sorted splits, key regressing at the seam) must also
+# refuse (ADVICE r2); equal (turn, ts) at the seam is a legitimate
+# duplicate, not a lie.
+#
+# read_error / state — the kind=5 per-partition read errors, and with
+# :fold_states the kind=4 fused-state rows.
+_LAYOUT_SQL = """
+WITH segr AS (
+  SELECT fid, pos, row_number() OVER (ORDER BY fid, pos) AS _seg_rank
+  FROM {rowsrc} WHERE kind = 1
+),
+ext AS (
+  SELECT conv_id, count(1) AS _n,
+    min(_seg_rank) AS _rmin, max(_seg_rank) AS _rmax,
+    max(CASE WHEN (_flags & 1) = 0 THEN _seg_rank END) AS _bad_first,
+    min(CASE WHEN (_flags & 2) = 0 THEN _seg_rank END) AS _bad_last
+  FROM (SELECT conv_id, fid, pos, cnt AS _flags FROM {out} WHERE kind = 3)
+  JOIN segr USING (fid, pos)
+  GROUP BY conv_id
+)
+(SELECT 'extent' AS why, conv_id, CAST(NULL AS INT) AS partition_id,
+   CAST(NULL AS STRING) AS payload
+ FROM ext
+ WHERE _n <> _rmax - _rmin + 1
+   OR coalesce(_bad_first, _rmin) <> _rmin
+   OR coalesce(_bad_last, _rmax) <> _rmax
+ LIMIT 1)
+UNION ALL
+(SELECT 'seam', f_conv, NULL, NULL FROM {pairs}
+ WHERE f_turn < p_turn OR (f_turn = p_turn AND f_ts < p_ts)
+ LIMIT 1)
+UNION ALL
+SELECT CASE WHEN kind = 5 THEN 'read_error' ELSE 'state' END, NULL,
+  partition_id, payload
+FROM {rowsrc} WHERE kind = 5 OR (kind = 4 AND :fold_states)
+"""
+
+# Violation rows: the UDF's direct rows; split-spanning duplicate runs
+# (per-key partial counts -> one row per duplicated key, the same
+# (n_copies, min-bucket) row the fused window folds to; input is
+# candidates only — sparse by construction); and the boundary-pair
+# checks. The three pair checks share the whole stitch subtree, so one
+# projection evaluates all three conditions per pair and explodes the
+# matches — a pair failing several checks emits one row per check.
+_VIOLATIONS_SQL = f"""
+SELECT :snap AS snapshot_id, partition_id, check_id, mgu_failure,
+  schema_1, schema_2, conv_id, turn_idx, payload
+FROM {{rowsrc}} WHERE kind = 0
+UNION ALL
+SELECT :snap, pid, 'unique_key', CAST(NULL AS STRING), CAST(NULL AS STRING),
+  CAST(NULL AS STRING), conv_id, turn_idx,
+  to_json(named_struct('n_copies', n))
+FROM (SELECT conv_id, turn_idx, sum(cnt) AS n, min(partition_id) AS pid
+      FROM {{rowsrc}} WHERE kind = 2 GROUP BY conv_id, turn_idx)
+WHERE n > 1
+UNION ALL
+SELECT :snap, f_bucket, _h.c, CAST(NULL AS STRING), CAST(NULL AS STRING),
+  CAST(NULL AS STRING), f_conv, f_turn, _h.p
+FROM (SELECT f_bucket, f_conv, f_turn, explode(filter(array(
+    CASE WHEN f_turn > p_turn + 1 THEN named_struct('c', 'turn_gap',
+      'p', to_json(named_struct('prev_idx', CAST(p_turn AS BIGINT),
+        'missing', CAST(f_turn - p_turn - 1 AS BIGINT)))) END,
+    CASE WHEN f_turn = p_turn THEN named_struct('c', 'turn_dup',
+      'p', to_json(named_struct('prev_idx', CAST(p_turn AS BIGINT)))) END,
+    CASE WHEN f_ts < p_ts THEN named_struct('c', 'ts_order',
+      'p', to_json(named_struct(
+        'prev_ts', date_format(timestamp_micros(p_ts), {TS_FORMAT_SQL}),
+        'ts', date_format(timestamp_micros(f_ts), {TS_FORMAT_SQL})))) END
+  ), h -> h IS NOT NULL)) AS _h
+  FROM {{pairs}})
+"""
+
+
 def check_rowlevel_clustered(spark: SparkSession, catalog, snapshot_id: str,
                              pending: List[int], role_vocab: List[str],
                              tool_vocab: List[str],
@@ -683,127 +813,24 @@ def check_rowlevel_clustered(spark: SparkSession, catalog, snapshot_id: str,
     # kind=4 fused-state rows (split-count-sized) ride along so the
     # state collection below reads this small store too — only the
     # conversation-count-sized kind=3 extent rows stay behind
-    rowsrc = out.filter(F.col("kind") != 3).localCheckpoint(eager=True)
+    rowsrc = out.where("kind <> 3").localCheckpoint(eager=True)
     _tmark("rowsrc checkpoint")
 
-    def _verify_frames(out_f, rowsrc_f):
-        """Layout-verification frames over the given (possibly
-        error-filtered) stores: (bad_extent, bad_seam, boundary pairs).
+    def _layout(out_f, rowsrc_f, fold: bool):
+        # boundary pairs, then ONE driver action for all three
+        # verifications (extent lie, seam lie, per-split read errors) —
+        # fixed per-snapshot cost is one small job. The error branch
+        # reads the SMALL checkpointed store (kind=5 is sparse by
+        # construction). With ``fold`` (collect_states on a manifest of
+        # <= 256 splits), the kind=4 fused-state rows (one per split and
+        # partition) ride the same action for the driver-side merge below.
+        pairs_f = spark.sql(_PAIRS_SQL, rowsrc=rowsrc_f)
+        rows_f = spark.sql(_LAYOUT_SQL, {"fold_states": fold}, out=out_f,
+                           rowsrc=rowsrc_f, pairs=pairs_f).collect()
+        return pairs_f, rows_f
 
-        part 2 — GLOBAL conv contiguity: the UDF verifies contiguity
-        within each split; the boundary stitch compares only ADJACENT
-        segments. A cross-split-only lie — a conv reappearing in a
-        non-adjacent segment — is invisible to both, so verify globally:
-        each conv must occupy exactly one maximal run of consecutive
-        segments, first-of-segment everywhere but its first segment and
-        last-of-segment everywhere but its last. Inputs are the
-        per-(conv, segment) extent rows (kind=3, ~one per conversation)
-        and a segment-rank table (#segments rows of two ints — the rank
-        window is a single tiny task, bounded by split count, not row
-        count).
-
-        stitch — cross-split pairs, TWO-LEVEL: boundary rows ordered by
-        manifest file order + in-file position reconstruct global scan
-        order. Level 1 pairs segments WITHIN each file (window per fid —
-        parallel across files, so 10^5-10^6 byte-range splits of a few
-        big files never funnel through one task). Level 2 pairs each
-        file's first segment with the previous present file's last
-        segment — the only driver-order pass, one row per FILE
-        (manifest-sized), broadcast to the join.
-
-        part 3 — cross-split sort order: a lie that exists ONLY across
-        a boundary (locally sorted splits, key regressing at the seam)
-        must also refuse (ADVICE r2); equal (turn, ts) at the seam is a
-        legitimate duplicate, not a lie."""
-        segr = (rowsrc_f.filter(F.col("kind") == 1).select("fid", "pos")
-                .withColumn("_seg_rank",
-                            F.row_number().over(Window.orderBy("fid",
-                                                               "pos"))))
-        c3 = out_f.filter(F.col("kind") == 3).select(
-            "conv_id", "fid", "pos", F.col("cnt").alias("_flags"))
-        ext = (c3.join(segr, ["fid", "pos"])
-               .groupBy("conv_id")
-               .agg(F.count(F.lit(1)).alias("_n"),
-                    F.min("_seg_rank").alias("_rmin"),
-                    F.max("_seg_rank").alias("_rmax"),
-                    # any non-first-of-segment occurrence above rmin, or
-                    # non-last-of-segment occurrence below rmax, is a lie
-                    F.max(F.when(F.col("_flags").bitwiseAND(F.lit(1)) == 0,
-                                 F.col("_seg_rank"))).alias("_bad_first"),
-                    F.min(F.when(F.col("_flags").bitwiseAND(F.lit(2)) == 0,
-                                 F.col("_seg_rank"))).alias("_bad_last")))
-        bad_extent = ext.filter(
-            (F.col("_n") != F.col("_rmax") - F.col("_rmin") + 1)
-            | (F.coalesce(F.col("_bad_first"), F.col("_rmin"))
-               != F.col("_rmin"))
-            | (F.coalesce(F.col("_bad_last"), F.col("_rmax"))
-               != F.col("_rmax"))
-        ).select("conv_id")
-
-        bnd = rowsrc_f.filter(F.col("kind") == 1).select(
-            "fid", "pos", "f_conv", "f_turn", "f_ts", "f_bucket",
-            "l_conv", "l_turn", "l_ts")
-        wf = Window.partitionBy("fid").orderBy("pos")
-        ranked = (bnd
-                  .withColumn("p_conv", F.lag("l_conv").over(wf))
-                  .withColumn("p_turn", F.lag("l_turn").over(wf))
-                  .withColumn("p_ts", F.lag("l_ts").over(wf))
-                  .withColumn("_rn", F.row_number().over(wf)))
-        pair_cols = ["fid", "pos", "f_conv", "f_turn", "f_ts", "f_bucket",
-                     "p_conv", "p_turn", "p_ts"]
-        intra = ranked.filter(F.col("_rn") > 1).select(*pair_cols)
-        wfd = Window.partitionBy("fid").orderBy(F.desc("pos"))
-        lasts = (bnd.withColumn("_rn", F.row_number().over(wfd))
-                 .filter(F.col("_rn") == 1)
-                 .select(F.col("fid").alias("_pf"),
-                         F.col("l_conv").alias("p_conv"),
-                         F.col("l_turn").alias("p_turn"),
-                         F.col("l_ts").alias("p_ts")))
-        lasts = (lasts
-                 .withColumn("_nf",
-                             F.lead("_pf").over(Window.orderBy("_pf")))
-                 .filter(F.col("_nf").isNotNull()))
-        firsts = (ranked.filter(F.col("_rn") == 1)
-                  .select("fid", "pos", "f_conv", "f_turn", "f_ts",
-                          "f_bucket"))
-        cross = (firsts.join(F.broadcast(lasts),
-                             firsts["fid"] == lasts["_nf"], "inner")
-                 .select(*pair_cols))
-        b = (intra.unionByName(cross)
-             .filter(F.col("p_conv") == F.col("f_conv")))
-        bad_seam = (b.filter((F.col("f_turn") < F.col("p_turn"))
-                             | ((F.col("f_turn") == F.col("p_turn"))
-                                & (F.col("f_ts") < F.col("p_ts"))))
-                    .select(F.col("f_conv").alias("conv_id")))
-        return bad_extent, bad_seam, b
-
-    def _probe(bad_extent, bad_seam):
-        return (bad_extent.select(F.lit("extent").alias("why"), "conv_id")
-                .limit(1)
-                .unionByName(bad_seam.select(F.lit("seam").alias("why"),
-                                             "conv_id").limit(1)))
-
-    # ONE driver action carries all three verifications (extent lie,
-    # seam lie, per-split read errors) — fixed per-snapshot cost is one
-    # small job. The error branch reads the SMALL checkpointed store
-    # (kind=5 is sparse by construction). With collect_states on a
-    # manifest of <= 256 splits, the kind=4 fused-state rows (one per
-    # split and partition) ride the same action for the driver-side
-    # merge below.
     fold_states = collect_states and len(splits) <= 256
-    bad_extent, bad_seam, b = _verify_frames(out, rowsrc)
-    side = (rowsrc.filter(F.col("kind").isin(5, 4) if fold_states
-                          else F.col("kind") == 5)
-            .select(F.when(F.col("kind") == 5, F.lit("read_error"))
-                    .otherwise(F.lit("state")).alias("why"),
-                    F.lit(None).cast("string").alias("conv_id"),
-                    "partition_id", "payload"))
-    rows = (_probe(bad_extent, bad_seam)
-            .select("why", "conv_id",
-                    F.lit(None).cast("int").alias("partition_id"),
-                    F.lit(None).cast("string").alias("payload"))
-            .unionByName(side)
-            .collect())
+    pairs, rows = _layout(out, rowsrc, fold_states)
     read_errors = {r.partition_id: r.payload for r in rows
                    if r.why == "read_error"}
     states = [r for r in rows if r.why == "state"]
@@ -821,21 +848,23 @@ def check_rowlevel_clustered(spark: SparkSession, catalog, snapshot_id: str,
                 "clustered scan read errors: "
                 + "; ".join(f"partition {p}: {m}"
                             for p, m in sorted(read_errors.items())))
-        bad = list(read_errors)
+        bad = ", ".join(str(int(p)) for p in sorted(read_errors))
         # kind=1 boundary and kind=3 extent rows carry NO partition_id
-        # (NULL), so a bare ~isin() predicate is NULL for them and Spark
+        # (NULL), so a bare NOT IN predicate is NULL for them and Spark
         # drops them ALL — which would silently disable every cross-split
         # check and the layout verification for the HEALTHY partitions.
         # They do carry fid, and a file belongs to exactly one partition,
         # so scope them by the errored partitions' file ids instead.
-        bad_fids = sorted({s[1] for s in splits if s[3] in read_errors})
-        keep = (F.when(F.col("partition_id").isNotNull(),
-                       ~F.col("partition_id").isin(bad))
-                .otherwise(~F.col("fid").isin(bad_fids)))
-        out = out.filter(keep)
-        rowsrc = rowsrc.filter(keep)
-        bad_extent, bad_seam, b = _verify_frames(out, rowsrc)
-        probs = _probe(bad_extent, bad_seam).collect()
+        bad_fids = ", ".join(str(f) for f in
+                             sorted({s[1] for s in splits
+                                     if s[3] in read_errors}))
+        keep = (f"CASE WHEN partition_id IS NOT NULL "
+                f"THEN NOT partition_id IN ({bad}) "
+                f"ELSE NOT fid IN ({bad_fids}) END")
+        out = out.where(keep)
+        rowsrc = rowsrc.where(keep)
+        pairs, rows = _layout(out, rowsrc, False)
+        probs = [r for r in rows if r.why in ("extent", "seam")]
     _tmark("extent+seam+error verify")
     if probs:
         why, cv = probs[0].why, probs[0].conv_id
@@ -850,66 +879,8 @@ def check_rowlevel_clustered(spark: SparkSession, catalog, snapshot_id: str,
             f"turn_idx, ts) but conv {cv!r} regresses across a split "
             "boundary — shuffle path (check_rowlevel_fused) required")
 
-    snap = F.lit(snapshot_id).alias("snapshot_id")
-    vcols = ["partition_id", "check_id", "mgu_failure", "schema_1",
-             "schema_2", "conv_id", "turn_idx", "payload"]
-    direct = rowsrc.filter(F.col("kind") == 0).select(snap, *vcols)
-
-    # split-spanning duplicate runs: per-key partial counts -> one row per
-    # duplicated key (same (n_copies, min-bucket) row the fused window
-    # folds to). Input is candidates only — sparse by construction.
-    uk = (rowsrc.filter(F.col("kind") == 2)
-          .groupBy("conv_id", "turn_idx")
-          .agg(F.sum("cnt").alias("n"), F.min("partition_id").alias("pid"))
-          .filter(F.col("n") > 1)
-          .select(snap, F.col("pid").alias("partition_id"),
-                  F.lit("unique_key").alias("check_id"),
-                  F.lit(None).cast("string").alias("mgu_failure"),
-                  F.lit(None).cast("string").alias("schema_1"),
-                  F.lit(None).cast("string").alias("schema_2"),
-                  "conv_id", "turn_idx",
-                  F.to_json(F.struct(F.col("n").alias("n_copies")))
-                  .alias("payload")))
-
-    # the three boundary-pair checks share the whole stitch subtree; a
-    # union of three filtered branches would execute it three times
-    # (Spark reuses exchanges, not arbitrary subplans). One projection
-    # evaluates all three conditions per pair and explodes the matches —
-    # a pair failing several checks still emits one row per check, same
-    # rows as the former three-branch union.
-    def _hit(cond, check_id, payload):
-        return F.when(cond, F.struct(F.lit(check_id).alias("c"),
-                                     payload.alias("p")))
-
-    hits = F.array(
-        _hit(F.col("f_turn") > F.col("p_turn") + 1, "turn_gap",
-             F.to_json(F.struct(
-                 F.col("p_turn").cast("bigint").alias("prev_idx"),
-                 (F.col("f_turn") - F.col("p_turn") - 1)
-                 .cast("bigint").alias("missing")))),
-        _hit(F.col("f_turn") == F.col("p_turn"), "turn_dup",
-             F.to_json(F.struct(
-                 F.col("p_turn").cast("bigint").alias("prev_idx")))),
-        _hit(F.col("f_ts") < F.col("p_ts"), "ts_order",
-             F.to_json(F.struct(
-                 F.date_format(F.timestamp_micros("p_ts"), _TS_FMT)
-                 .alias("prev_ts"),
-                 F.date_format(F.timestamp_micros("f_ts"), _TS_FMT)
-                 .alias("ts")))),
-    )
-    pair_b = (b.select("f_bucket", "f_conv", "f_turn",
-                       F.explode(F.filter(hits, lambda h: h.isNotNull()))
-                       .alias("_h"))
-              .select(snap, F.col("f_bucket").alias("partition_id"),
-                      F.col("_h.c").alias("check_id"),
-                      F.lit(None).cast("string").alias("mgu_failure"),
-                      F.lit(None).cast("string").alias("schema_1"),
-                      F.lit(None).cast("string").alias("schema_2"),
-                      F.col("f_conv").alias("conv_id"),
-                      F.col("f_turn").alias("turn_idx"),
-                      F.col("_h.p").alias("payload")))
-
-    violations = direct.unionByName(uk).unionByName(pair_b)
+    violations = spark.sql(_VIOLATIONS_SQL, {"snap": snapshot_id},
+                           rowsrc=rowsrc, pairs=pairs)
     if not collect_states:
         return (violations, read_errors) if with_errors else violations
 
@@ -934,8 +905,7 @@ def check_rowlevel_clustered(spark: SparkSession, catalog, snapshot_id: str,
                 if r.partition_id in by_pid else st)
         pstates = sorted(by_pid.items())
     else:
-        k4 = rowsrc.filter(F.col("kind") == 4).select("partition_id",
-                                                      "payload")
+        k4 = rowsrc.where("kind = 4").select("partition_id", "payload")
         pstates = sorted(
             k4.rdd
             .map(lambda r: (r[0], json.loads(r[1])))

@@ -36,6 +36,7 @@ from typing import Any, Dict, Iterator, List, Optional, Tuple
 
 import pyarrow.parquet as pq
 
+from ..functions.session import sql_ident
 from ..ir.convert import arrow_type_to_ir
 from ..ir.schema_ir import (
     is_failure,
@@ -455,32 +456,33 @@ def sql_partition_states(df, census: Dict[int, Dict[str, Dict[str, Any]]],
     (physical truth, pre-coercion); all-NULL columns are detected from the
     data-level null counts.
     """
-    from pyspark.sql import functions as F
-
     data_cols = [c for c in df.columns if c != partition_col]
-    aggs = [F.count(F.lit(1)).alias("_rows")]
-    for c in data_cols:
-        aggs.append(F.count(c).alias(f"{c}__cnt"))
-        aggs.append(F.min(c).alias(f"{c}__min"))
-        aggs.append(F.max(c).alias(f"{c}__max"))
-    rows = df.groupBy(F.col(partition_col).alias("_pid")).agg(*aggs).collect()
+    pc = sql_ident(partition_col)
+    # one (count, min, max) triple per column, read back by position:
+    # row = (pid, rows, cnt_0, min_0, max_0, cnt_1, ...)
+    aggs = "".join(f", count({q}), min({q}), max({q})"
+                   for q in map(sql_ident, data_cols))
+    rows = df.sparkSession.sql(
+        f"SELECT {pc}, count(1){aggs} FROM {{df}} GROUP BY {pc}",
+        df=df).collect()
 
     out: List[Tuple[int, PartState]] = []
     for r in rows:
-        pid = int(r["_pid"])
+        pid, n_rows = int(r[0]), int(r[1])
         state: PartState = {}
-        for c in data_cols:
+        for i, c in enumerate(data_cols):
+            cnt, lo, hi = r[2 + 3 * i: 5 + 3 * i]
             st = _empty_col_state()
-            st["count"] = int(r["_rows"])
-            st["nulls"] = int(r["_rows"]) - int(r[f"{c}__cnt"])
+            st["count"] = n_rows
+            st["nulls"] = n_rows - int(cnt)
             st["pids"] = [pid]
-            if int(r[f"{c}__cnt"]) > 0:
+            if int(cnt) > 0:
                 info = census.get(pid, {}).get(c)
                 st["schema"] = (dict(info["ir"]) if info
                                 else {"type": "any"})
                 st["phys"] = [info["phys"]] if info else []
-                st["min"] = _json_safe(r[f"{c}__min"])
-                st["max"] = _json_safe(r[f"{c}__max"])
+                st["min"] = _json_safe(lo)
+                st["max"] = _json_safe(hi)
             state[c] = st
         out.append((pid, state))
     return sorted(out)

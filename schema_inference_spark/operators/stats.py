@@ -180,8 +180,7 @@ def kll_cdf(spark, kll_bytes: bytes, edges: List[float]) -> List[float]:
 
 
 def grouped_quantiles(df: DataFrame, group_col: str, value,
-                      qs: Sequence[float],
-                      tiebreak_col: Optional[str] = None) -> DataFrame:
+                      qs: Sequence[float]) -> DataFrame:
     """EXACT per-group quantiles by ordinal selection (the "lower"
     method: the element at 1-based rank ``1 + floor(q * (n-1))`` of the
     group sorted by value) — one row per (group, q) with the selected
@@ -203,9 +202,7 @@ def grouped_quantiles(df: DataFrame, group_col: str, value,
     5-group input collapsed to ~250 histogram rows at the proxy —
     window_stats-style full-sort cost only returns in the no-duplicate
     worst case, where the histogram IS the input). ``value`` may be a
-    Column expression; ``tiebreak_col`` is accepted for API
-    compatibility and ignored — it only ever stabilized WHICH duplicate
-    row was selected, and the selected VALUE is tie-invariant."""
+    Column expression."""
     base = df.select(F.col(group_col).alias("_g"),
                      (value if not isinstance(value, str)
                       else F.col(value)).alias("_v"))

@@ -526,9 +526,9 @@ def validate(
                                             + [-1]))
             else:
                 out_violations = out_violations.cache()
-            counts = {r.partition_id: r.n for r in
-                      (out_violations.groupBy("partition_id")
-                       .agg(F.count(F.lit(1)).alias("n")).collect())}
+            counts = dict(spark.sql(
+                "SELECT partition_id, count(1) FROM {v} GROUP BY partition_id",
+                v=out_violations).collect())
             violations = out_violations
             _mark("materialize-violations")
             break

@@ -46,6 +46,10 @@ VIOLATION_DDL = ("snapshot_id string, partition_id int, check_id string, "
 
 _VIOLATION_COLS = [f.strip().split(" ")[0] for f in VIOLATION_DDL.split(",")]
 
+# what append_violations stores: every violation column but snapshot_id,
+# with partition_id as the hive-style directory column
+_STORED_VIOLATION_DDL = VIOLATION_DDL.removeprefix("snapshot_id string, ")
+
 
 class SnapshotCatalog:
     def __init__(self, root: str, audit_root: Optional[str] = None,
@@ -160,19 +164,25 @@ class SnapshotCatalog:
                         partitions: Optional[Sequence[int]] = None) -> DataFrame:
         """Read persisted violations (optionally pruned to a partition
         subset; pass -1 to include snapshot-level rows). Partition pruning
-        happens at planning time via the hive-style partition_id dirs."""
+        happens at planning time via the hive-style partition_id dirs.
+        The store's schema is fixed, so the read names it and runs no
+        schema-inference job."""
         d = self._violations_dir(snapshot_id)
         has_files = os.path.isdir(d) and any(
             f.endswith(".parquet")
             for _, _, fs in os.walk(d) for f in fs)
         if not has_files:
             return local_frame(spark, [], VIOLATION_DDL)
-        df = (spark.read.option("basePath", d).parquet(d)
-              .withColumn("snapshot_id", F.lit(snapshot_id))
-              .withColumn("partition_id", F.col("partition_id").cast("int")))
+        stored = (spark.read.schema(_STORED_VIOLATION_DDL)
+                  .option("basePath", d).parquet(d))
+        where = ""
         if partitions is not None:
-            df = df.filter(F.col("partition_id").isin(list(partitions)))
-        return df.select(*_VIOLATION_COLS)
+            ids = ", ".join(str(int(p)) for p in partitions)
+            where = f" WHERE partition_id IN ({ids})" if ids else " WHERE false"
+        return spark.sql(
+            f"SELECT :snap AS snapshot_id, {', '.join(_VIOLATION_COLS[1:])} "
+            f"FROM {{v}}{where}",
+            args={"snap": snapshot_id}, v=stored)
 
     def append_audit(self, audit_df: DataFrame, snapshot_id: str) -> None:
         """Idempotent per-run append. Partition-grained overwrite semantics

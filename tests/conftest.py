@@ -9,7 +9,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 @pytest.fixture(scope="session")
 def spark():
     from schema_inference_spark.functions import get_spark
-    s = get_spark(app_name="tests", master="local[8]", shuffle_partitions=8)
+    # no master: get_spark's default, local[<usable cores>]
+    s = get_spark(app_name="tests", shuffle_partitions=8)
     yield s
     s.stop()
 
@@ -32,3 +33,19 @@ def catalog(fixture_root):
 @pytest.fixture()
 def sf_dir():
     return os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
+
+
+@pytest.fixture()
+def py4j_calls(monkeypatch):
+    """A one-element list counting the Py4J commands (driver -> JVM round
+    trips) sent during the test; read it before and after a step."""
+    from py4j.clientserver import ClientServerConnection
+    calls = [0]
+    send = ClientServerConnection.send_command
+
+    def counting(self, command):
+        calls[0] += 1
+        return send(self, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    return calls

@@ -161,7 +161,7 @@ def test_warm_op_reuses_compiled_code(fixture_root, tmp_path, clustered):
     holds a whole op."""
     env = {k: v for k, v in os.environ.items()
            if not k.startswith("PYSPARK_GATEWAY")}
-    env.update(SPARK_GRAFT_DRIVER_MEM="1g", SPARK_GRAFT_PRETOUCH="0",
+    env.update(SPARK_GRAFT_DRIVER_MEM="1g",
                PYTHONPATH=os.pathsep.join(
                    p for p in (REPO, env.get("PYTHONPATH")) if p))
     out = subprocess.run(
